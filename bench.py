@@ -140,10 +140,10 @@ builder = (SparkSession.builder.master("local[" + cpus + "]")
            .config("spark.ui.enabled", "false"))
 try:  # the TREE under test supplies its static confs (absent in old trees)
     from sheetreader_duckdb_spark.session import static_builder_confs
-    for _k, _v in static_builder_confs().items():
-        builder = builder.config(_k, _v)
-except Exception:
-    pass
+except ImportError:
+    static_builder_confs = dict
+for _k, _v in static_builder_confs().items():
+    builder = builder.config(_k, _v)
 spark = builder.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 from sheetreader_duckdb_spark.session import configure_session
@@ -670,11 +670,9 @@ def main() -> None:
     # Engine-level static confs (codegen class-cache sizing): part of the
     # engine posture under test, applied by every session builder of this
     # package — see session.static_builder_confs for the measurements.
-    from sheetreader_duckdb_spark.session import static_builder_confs
+    from sheetreader_duckdb_spark.session import apply_static_confs
 
-    for _k, _v in static_builder_confs().items():
-        builder = builder.config(_k, _v)
-    spark = builder.getOrCreate()
+    spark = apply_static_confs(builder).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     configure_session(spark)
     corpus = all_queries()

@@ -35,11 +35,9 @@ def main() -> None:
         .config("spark.driver.memory", "16g")
         .config("spark.ui.enabled", "false")
     )
-    from sheetreader_duckdb_spark.session import static_builder_confs
+    from sheetreader_duckdb_spark.session import apply_static_confs
 
-    for _k, _v in static_builder_confs().items():
-        builder = builder.config(_k, _v)
-    spark = builder.getOrCreate()
+    spark = apply_static_confs(builder).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     configure_session(spark)
 

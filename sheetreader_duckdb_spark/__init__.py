@@ -82,7 +82,13 @@ def _ship_package(spark) -> None:
 
 
 def register(spark):
-    """Register the sheetreader data source on a SparkSession."""
+    """Register the sheetreader data source on a SparkSession.
+
+    Captures ``defaultParallelism`` once, as the task-slot count that AUTO
+    shard planning fills with one wave; it is not refreshed later. Call
+    this after the executors are up (until they register, a cluster
+    reports 2) and again after the cluster is resized, or pin the width
+    with ``spark.default.parallelism`` or the ``max_shards`` option."""
     from sheetreader_duckdb_spark.sources.xlsx import datasource, inference, parser
     from sheetreader_duckdb_spark.sources.xlsx.datasource import SheetReaderDataSource
 
@@ -106,7 +112,7 @@ def register(spark):
         pass
     # Capture the cluster width BEFORE the class is pickled for the JVM:
     # the planning worker that later calls partitions() has no active
-    # session, so the auto shard cap must travel with the class (ADVICE r9).
+    # session, so the task-slot count must travel with the class (ADVICE r9).
     SheetReaderDataSource._cluster_default_parallelism = (
         spark.sparkContext.defaultParallelism
     )

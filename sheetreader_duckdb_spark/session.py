@@ -37,13 +37,25 @@ def static_builder_confs() -> dict:
     a driver needs anyway — and the value is workload-shaped (number of
     distinct operators run per process), not cluster-shaped, so one default
     serves local[32] and a production driver alike. Env-overridable for
-    memory-constrained drivers.
+    memory-constrained drivers; a non-integer value raises here, naming the
+    variable, instead of failing later inside the JVM.
     """
-    return {
-        "spark.sql.codegen.cache.maxEntries": os.environ.get(
-            "SPARK_GRAFT_CODEGEN_CACHE", "10000"
-        ),
-    }
+    raw = os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "10000")
+    try:
+        entries = int(raw)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_CODEGEN_CACHE must be an integer, got {raw!r}"
+        ) from None
+    return {"spark.sql.codegen.cache.maxEntries": str(entries)}
+
+
+def apply_static_confs(builder):
+    """Set every ``static_builder_confs()`` entry on a
+    ``SparkSession.Builder``; returns the builder."""
+    for k, v in static_builder_confs().items():
+        builder = builder.config(k, v)
+    return builder
 
 
 # -- deferred cache release ---------------------------------------------------
@@ -147,10 +159,7 @@ def get_spark(app_name: str = "sheetreader-spark", shuffle_partitions: int | Non
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in static_builder_confs().items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    return spark
+    return apply_static_confs(builder).getOrCreate()
 
 
 def configure_session(spark: SparkSession) -> SparkSession:

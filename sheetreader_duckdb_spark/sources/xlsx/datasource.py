@@ -493,7 +493,8 @@ class _Options:
             raise ValueError("Sheet index & sheet name cannot be set at the same time.")
         # threads: intra-file parse parallelism (reference S4, default
         # hardware/2 there). Spark-idiomatically this is the number of
-        # SHARD PARTITIONS per large file — unset ⇒ auto (size-scaled).
+        # SHARD PARTITIONS per large file — unset ⇒ auto (size-scaled,
+        # one wave over the task slots).
         threads_opt = options.get("threads")
         threads = int(threads_opt) if threads_opt is not None else 0
         if threads_opt is not None and threads <= 0:
@@ -514,9 +515,8 @@ class _Options:
         if cols_opt is not None and not columns:
             raise ValueError("sheetreader: 'columns' must name at least one column")
         # Ceiling on AUTO shard count per file (explicit `threads` is never
-        # capped). Unset ⇒ cluster-aware default at planning time (see
-        # _auto_shard_cap): a 10 GB sheet on a 1000-core cluster wants more
-        # than a local[32] box's 32 shards.
+        # capped). Unset ⇒ the read plans one wave over the task slots (see
+        # _auto_shard_counts).
         ms_opt = options.get("max_shards")
         max_shards = int(ms_opt) if ms_opt is not None else None
         if ms_opt is not None and max_shards <= 0:
@@ -539,36 +539,54 @@ class _Options:
         )
 
 
+def _file_size(path: str) -> int:
+    try:
+        return os.path.getsize(path)
+    except OSError:
+        return 0  # planned as 1 shard; the read raises the real error
+
+
 def _auto_shard_cap(
     max_shards: int | None, default_parallelism: int | None = None
 ) -> int:
-    """Ceiling for the size-scaled AUTO shard count of one file.
-
-    ``max_shards`` (reader option) wins when set. Otherwise
-    ``max(32, defaultParallelism)``: 32 keeps every local[32] plan
-    byte-stable with rounds 1-8, while a real cluster (1000 cores ⇒
-    defaultParallelism ≥ 1000) lets one 10 GB sheet feed a whole stage
-    instead of 32 tasks (VERDICT r8 task 5).
-
-    ``default_parallelism`` is captured at ``register(spark)`` time as a
-    class attribute on SheetReaderDataSource and rides the pickled class
-    into the planning worker (ADVICE r9: partitions() executes in a
-    separate driver-side Python worker with NO active session, so the old
-    getActiveSession() resolution was inert on a real cluster — it is kept
-    only as a harmless fallback for unpickled direct use)."""
+    """Shard budget of one AUTO-planned read: the ``max_shards`` option
+    when set, else the task slots. The slot count is ``defaultParallelism``
+    as captured at ``register(spark)`` onto the pickled class (the planning
+    worker that calls partitions() has no active session, ADVICE r9), or
+    ``os.cpu_count()`` for a reader built without a captured width."""
     if max_shards is not None:
         return max_shards
-    if default_parallelism is not None:
-        return max(32, int(default_parallelism))
-    try:
-        from pyspark.sql import SparkSession
+    return int(default_parallelism or os.cpu_count() or 1)
 
-        s = SparkSession.getActiveSession()
-        if s is not None:
-            return max(32, s.sparkContext.defaultParallelism)
-    except Exception:
-        pass
-    return 32
+
+def _size_shards(size: int) -> int:
+    """Size-based shard count of one file: ~1 shard per compressed MB."""
+    return max(1, size >> 20)
+
+
+def _auto_shard_counts(
+    sizes: list[int], max_shards: int | None, default_parallelism: int | None
+) -> list[int]:
+    """AUTO shard count per file of one read (``sizes`` in compressed
+    bytes): the size-based count, planned as at most ONE wave over the task
+    slots.
+
+    Every shard pays a fixed cost — Spark's per-task Python/Arrow overhead
+    and, for a foreign file, a full re-inflate of the worksheet member — so
+    a shard past the slot count adds a wave and buys no parallelism.
+    Measured at local[4] on a 4-core machine, whole-sheet loads of the
+    10.7 MB 600k-row lineitem workbook: 1.26-1.45 s as 4 shards, 1.81-2.01 s
+    as 5, 2.11-2.26 s as 10 (its size-based count); its foreign copy
+    1.73-1.88 s as 4, 2.91-2.97 s as 5, 2.60-3.23 s as 10.
+
+    The slots are split evenly across the files, at least 1 and at most
+    the size-based count per file, so a read of at least as many files as
+    slots is one partition per file. ``max_shards`` replaces the budget
+    with a per-file ceiling."""
+    cap = _auto_shard_cap(max_shards, default_parallelism)
+    if max_shards is None:
+        cap = max(1, cap // max(1, len(sizes)))
+    return [min(_size_shards(s), cap) for s in sizes]
 
 
 def _infer_for_file(path: str, opts: _Options) -> SheetSchema:
@@ -881,10 +899,9 @@ class SheetReaderReader(DataSourceReader):
     def __init__(self, options, schema: StructType, default_parallelism=None):
         self.opts = _Options.from_options(options)
         self.schema = schema
-        # Cluster fan-out captured at register() time (ADVICE r9: this
+        # Task-slot count captured at register() time (ADVICE r9: this
         # reader plans inside a driver-side Python worker where NO active
-        # SparkSession exists, so resolving defaultParallelism here always
-        # fell back to 32 on a real cluster — the value must be plumbed in).
+        # SparkSession exists, so the value must be plumbed in).
         self._default_parallelism = default_parallelism
         self._staged_filters: tuple = ()
         self.col_types = []
@@ -949,133 +966,34 @@ class SheetReaderReader(DataSourceReader):
         </row>-aligned chunks, so the expensive scan divides across executor
         cores. Result-invariant: shard assignment is deterministic and the
         union of shards is exactly the file's rows.
+
+        Shard counts: an explicit ``threads`` applies to every file, like
+        the reference's S4. Otherwise the read plans at most one wave over
+        the task slots (``_auto_shard_counts``), and a file whose size-based
+        count is above 4 is then refined by its zip metadata
+        (``_refine_auto_shards``).
         """
+        paths = self.opts.paths
+        if self.opts.threads > 0:
+            counts = [self.opts.threads] * len(paths)
+        else:
+            sizes = [_file_size(p) for p in paths]
+            counts = _auto_shard_counts(
+                sizes, self.opts.max_shards, self._default_parallelism
+            )
+            # Probed when the SIZE-based count is above 4, whatever the
+            # budget left (a big file on 4 slots keeps its sst cap and
+            # prune-aware fan-out), and only while there is a shard to
+            # drop: a many-small-file directory read never pays per-file
+            # zip metadata reads at planning.
+            counts = [
+                self._refine_auto_shards(p, n)
+                if n > 1 and _size_shards(size) > 4
+                else n
+                for p, size, n in zip(paths, sizes, counts)
+            ]
         parts = []
-        for p in self.opts.paths:
-            if self.opts.threads > 0:
-                n = self.opts.threads  # explicit, like the reference's S4
-            else:
-                try:
-                    size_mb = os.path.getsize(p) >> 20
-                except OSError:
-                    size_mb = 0
-                # Auto: ~1 shard per compressed MB, capped cluster-aware
-                # (max(32, defaultParallelism), or the max_shards option)
-                # so a single big file can feed every core of the executor
-                # fleet, not just a local[32] box's 32 tasks.
-                n = max(1, min(
-                    _auto_shard_cap(
-                        self.opts.max_shards, self._default_parallelism
-                    ),
-                    size_mb,
-                ))
-                # String-heavy refinement: every shard pays an O(sst) fixed
-                # cost (decompress + offset-index the shared-string heap),
-                # while the row scan divides by n — so when the heap rivals
-                # the sheet in bytes, more shards just multiply overhead.
-                # Cap n at ~8 shards per sheet/sst byte ratio (zip central
-                # directory read only — no decompression at planning).
-                # Measured on the 800k-unique-string partsupp witness
-                # (sheet 139 MB, sst 123 MB → cap 9): 6-10 shards 4.7 s,
-                # 16 → 8.0 s, 24 → 9.2 s. Numeric/deduped sheets have
-                # tiny heaps and keep the size-based count. Probed only
-                # when sharding would actually happen (n > 4): a
-                # many-small-file directory read never pays per-file zip
-                # metadata reads at planning.
-                if n <= 4:
-                    parts.extend(
-                        _SheetPartition(
-                            p, shard=i, n_shards=n,
-                            filters=self._staged_filters,
-                        )
-                        for i in range(n)
-                    )
-                    continue
-                # One metadata open serves both planning probes (r11
-                # review: the sst probe and the prune block used to open
-                # the same zip twice per filtered file).
-                try:
-                    with P.XlsxWorkbook(p) as wb:
-                        info = {
-                            i.filename: i.file_size
-                            for i in wb.zf.infolist()
-                        }
-                        # A split-indexed heap removes the per-shard sst
-                        # fixed cost entirely (each shard inflates only
-                        # the intervals its rows reference), so the cap
-                        # below would just throttle a cost that no longer
-                        # exists — keep the size-based fan-out.
-                        sst_indexed = SI.decode_sst_index(wb.zf) is not None
-                        sst_u = info.get("xl/sharedStrings.xml", 0)
-                        sheet_u = max(
-                            (
-                                v
-                                for k, v in info.items()
-                                if k.startswith("xl/worksheets/")
-                            ),
-                            default=0,
-                        )
-                        if sst_u > 0 and sheet_u > 0 and not sst_indexed:
-                            n = max(1, min(n, round(8 * sheet_u / sst_u)))
-                        # Prune-aware fan-out (r11): a selective filter
-                        # on a stats-indexed file should not schedule a
-                        # task per interval it will never inflate — at
-                        # fleet scale a point lookup must not fan out
-                        # 1000 no-op tasks. Planning-time only (read-time
-                        # skips are recomputed per partition and own
-                        # correctness); applied only without a `columns`
-                        # option, where output names map to file columns
-                        # by position. Any failure keeps the size-based n.
-                        if (
-                            self._staged_filters
-                            and self.opts.columns is None
-                            and not self.opts.coerce_to_string
-                            and n > 1
-                        ):
-                            sheet = wb.resolve_sheet(
-                                self.opts.sheet_name, self.opts.sheet_index
-                            )
-                            pts = SI.decode_split_index(wb.zf, sheet.path)
-                            st = (
-                                SI.decode_interval_stats(
-                                    wb.zf, sheet.path, pts
-                                )
-                                if pts
-                                else None
-                            )
-                            sv = (
-                                SI.decode_interval_string_stats(
-                                    wb.zf, sheet.path, pts
-                                )
-                                if pts
-                                else None
-                            )
-                            nc = (
-                                SI.decode_interval_null_counts(
-                                    wb.zf, sheet.path, pts
-                                )
-                                if pts
-                                and _has_null_filter(self._staged_filters)
-                                else None
-                            )
-                            bv = (
-                                SI.decode_interval_bool_counts(
-                                    wb.zf, sheet.path, pts
-                                )
-                                if pts
-                                and _has_bool_eq_filter(self._staged_filters)
-                                else None
-                            )
-                            if st or sv or nc or bv:
-                                skips = _plan_interval_skips(
-                                    self._staged_filters, self.schema,
-                                    [f.name for f in self.schema.fields],
-                                    st, wb.date1904, ivstr=sv, ivnc=nc,
-                                    ivbv=bv,
-                                )
-                                n = max(1, min(n, len(pts) - len(skips)))
-                except Exception:
-                    pass  # unreadable zip fails later with a real error
+        for p, n in zip(paths, counts):
             parts.extend(
                 _SheetPartition(p, shard=i, n_shards=n, filters=self._staged_filters)
                 for i in range(n)
@@ -1084,6 +1002,83 @@ class SheetReaderReader(DataSourceReader):
         # filterless query on the same (shared) reader must see none of it.
         self._staged_filters = ()
         return parts
+
+    def _refine_auto_shards(self, p: str, n: int) -> int:
+        """Lower an AUTO shard count from zip metadata alone (no
+        decompression at planning).
+
+        String-heavy refinement: every shard pays an O(sst) fixed cost
+        (decompress + offset-index the shared-string heap), while the row
+        scan divides by n — so when the heap rivals the sheet in bytes, more
+        shards just multiply overhead. Cap n at ~8 shards per sheet/sst byte
+        ratio. Measured on the 800k-unique-string partsupp witness (sheet
+        139 MB, sst 123 MB → cap 9): 6-10 shards 4.7 s, 16 → 8.0 s, 24 →
+        9.2 s. Numeric/deduped sheets have tiny heaps and keep their count.
+        """
+        try:
+            # One metadata open serves both probes.
+            with P.XlsxWorkbook(p) as wb:
+                info = {i.filename: i.file_size for i in wb.zf.infolist()}
+                # A split-indexed heap removes the per-shard sst fixed cost
+                # entirely (each shard inflates only the intervals its rows
+                # reference), so the cap below would just throttle a cost
+                # that no longer exists — keep the planned count.
+                sst_indexed = SI.decode_sst_index(wb.zf) is not None
+                sst_u = info.get("xl/sharedStrings.xml", 0)
+                sheet_u = max(
+                    (v for k, v in info.items() if k.startswith("xl/worksheets/")),
+                    default=0,
+                )
+                if sst_u > 0 and sheet_u > 0 and not sst_indexed:
+                    n = max(1, min(n, round(8 * sheet_u / sst_u)))
+                # Prune-aware fan-out (r11): a selective filter on a
+                # stats-indexed file should not schedule a task per interval
+                # it will never inflate — at fleet scale a point lookup must
+                # not fan out 1000 no-op tasks. Planning-time only (read-time
+                # skips are recomputed per partition and own correctness);
+                # applied only without a `columns` option, where output
+                # names map to file columns by position. Any failure keeps
+                # the planned n.
+                if (
+                    self._staged_filters
+                    and self.opts.columns is None
+                    and not self.opts.coerce_to_string
+                    and n > 1
+                ):
+                    sheet = wb.resolve_sheet(
+                        self.opts.sheet_name, self.opts.sheet_index
+                    )
+                    pts = SI.decode_split_index(wb.zf, sheet.path)
+                    st = (
+                        SI.decode_interval_stats(wb.zf, sheet.path, pts)
+                        if pts
+                        else None
+                    )
+                    sv = (
+                        SI.decode_interval_string_stats(wb.zf, sheet.path, pts)
+                        if pts
+                        else None
+                    )
+                    nc = (
+                        SI.decode_interval_null_counts(wb.zf, sheet.path, pts)
+                        if pts and _has_null_filter(self._staged_filters)
+                        else None
+                    )
+                    bv = (
+                        SI.decode_interval_bool_counts(wb.zf, sheet.path, pts)
+                        if pts and _has_bool_eq_filter(self._staged_filters)
+                        else None
+                    )
+                    if st or sv or nc or bv:
+                        skips = _plan_interval_skips(
+                            self._staged_filters, self.schema,
+                            [f.name for f in self.schema.fields],
+                            st, wb.date1904, ivstr=sv, ivnc=nc, ivbv=bv,
+                        )
+                        n = max(1, min(n, len(pts) - len(skips)))
+        except Exception:
+            pass  # unreadable zip fails later with a real error
+        return n
 
     def read(self, partition: _SheetPartition):
         # Task boundary on this (possibly reused) worker: let the pinned

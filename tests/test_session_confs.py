@@ -12,7 +12,9 @@ from __future__ import annotations
 
 import os
 
-from sheetreader_duckdb_spark.session import static_builder_confs
+import pytest
+
+from sheetreader_duckdb_spark.session import apply_static_confs, static_builder_confs
 
 
 def test_static_builder_confs_default():
@@ -25,6 +27,32 @@ def test_static_builder_confs_env_override(monkeypatch):
     assert (
         static_builder_confs()["spark.sql.codegen.cache.maxEntries"] == "256"
     )
+
+
+def test_static_builder_confs_rejects_non_integer(monkeypatch):
+    # A typo must fail at the builder, naming the variable, not surface as
+    # a JVM conf error (or a silently different cache size) later.
+    monkeypatch.setenv("SPARK_GRAFT_CODEGEN_CACHE", "10k")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CODEGEN_CACHE"):
+        static_builder_confs()
+
+
+def test_apply_static_confs_sets_every_conf(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CODEGEN_CACHE", "512")
+
+    class Builder:
+        def __init__(self):
+            self.confs = {}
+
+        def config(self, k, v):
+            self.confs[k] = v
+            return self
+
+    b = Builder()
+    assert apply_static_confs(b) is b
+    assert b.confs == static_builder_confs() == {
+        "spark.sql.codegen.cache.maxEntries": "512"
+    }
 
 
 def test_get_spark_applies_codegen_cache(spark):

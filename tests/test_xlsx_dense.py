@@ -232,52 +232,68 @@ def test_sst_comment_and_cdata_fall_back_to_expat():
 
 
 def test_auto_shard_cap_matrix(spark, tmp_path, monkeypatch):
-    """VERDICT r8 task 5: the AUTO shard cap is cluster-aware —
-    max(32, defaultParallelism), or the max_shards reader option — over a
-    mocked (file size × parallelism) matrix; explicit threads never cap."""
+    """The AUTO shard count plans at most one wave over the task slots
+    (defaultParallelism, as register(spark) captures it): a single file
+    gets min(1 per compressed MB, slots); a multi-file read splits the
+    slots evenly, at least 1 and at most the size-based count per file.
+    The max_shards option and explicit threads win. Over a mocked (file
+    sizes × slots) matrix."""
     import os as _os
 
     from pyspark.sql.types import StructType, StructField, DoubleType
 
     from sheetreader_duckdb_spark.sources.xlsx import datasource as DS
 
-    path = str(tmp_path / "m.xlsx")
-    with open(path, "wb") as f:
-        f.write(b"\x00")
-    schema = StructType([StructField("x", DoubleType())])
-
-    def reader(parallelism=None, **opts):
+    def reader(n_files=1, **opts):
         # The REAL plumbing (ADVICE r9): default_parallelism is what
         # register(spark) captures onto the pickled class — no mock of
-        # _auto_shard_cap, the cap math itself runs.
-        return DS.SheetReaderReader(
-            {"path": path, **opts}, schema, default_parallelism=parallelism
-        )
+        # the planner, the budget math itself runs.
+        d = tmp_path / f"files{n_files}"
+        d.mkdir(exist_ok=True)
+        for i in range(n_files):
+            (d / f"f{i}.xlsx").write_bytes(b"\x00")
+        path = str(d / "f0.xlsx") if n_files == 1 else str(d)
+        schema = StructType([StructField("x", DoubleType())])
+        return DS.SheetReaderReader({"path": path, **opts}, schema)
 
-    def n_parts(r, size_mb, parallelism=None):
-        monkeypatch.setattr(
-            _os.path, "getsize", lambda _p: size_mb << 20
-        )
-        if parallelism is not None:
-            r._default_parallelism = parallelism
-        return len(r.partitions())
+    def shards(r, sizes_mb, slots):
+        """Shard count per file, in path order."""
+        by_path = dict(zip(r.opts.paths, sizes_mb))
+        monkeypatch.setattr(_os.path, "getsize", lambda p: by_path[p] << 20)
+        r._default_parallelism = slots
+        counts = {}
+        for part in r.partitions():
+            counts[part.path] = part.n_shards
+        return [counts[p] for p in r.opts.paths]
 
-    r = reader()
+    # one big file on 4 slots → one wave of 4
+    assert shards(reader(), [10], 4) == [4]
     # small file: 1 shard per MB regardless of cluster size
-    assert n_parts(r, 3, 1000) == 3
-    # local[32]-era behavior preserved: big file, small cluster → 32
-    assert n_parts(r, 4096, 32) == 32
-    # big file + big cluster → parallelism-sized fan-out
-    assert n_parts(r, 4096, 1000) == 1000
-    # cap still binds by size: 100 MB on 1000 cores → 100 shards
-    assert n_parts(r, 100, 1000) == 100
-    # explicit max_shards option wins over cluster size
-    assert n_parts(reader(max_shards="8"), 4096, 1000) == 8
+    assert shards(reader(), [3], 1000) == [3]
+    # big file → slot-sized fan-out at any width
+    assert shards(reader(), [4096], 32) == [32]
+    assert shards(reader(), [4096], 1000) == [1000]
+    # the cap still binds by size: 100 MB on 1000 slots → 100 shards
+    assert shards(reader(), [100], 1000) == [100]
+    # two 40 MB files share 4 slots
+    assert shards(reader(2), [40, 40], 4) == [2, 2]
+    # ... evenly, each within its size-based count
+    assert shards(reader(2), [2, 40], 8) == [2, 4]
+    assert shards(reader(2), [2, 40], 64) == [2, 32]
+    # at least as many files as slots → one partition per file
+    assert shards(reader(8), [0] * 8, 4) == [1] * 8
+    assert shards(reader(8), [50] * 8, 4) == [1] * 8
+    # explicit max_shards option wins over the slots, per file
+    assert shards(reader(max_shards="8"), [4096], 1000) == [8]
+    assert shards(reader(max_shards="8"), [4096], 4) == [8]
+    assert shards(reader(2, max_shards="8"), [40, 40], 4) == [8, 8]
     # explicit threads is never capped
-    assert n_parts(reader(threads="48"), 1, 4) == 48
-    # the real _auto_shard_cap honors the option and the 32 floor
+    assert shards(reader(threads="48"), [1], 4) == [48]
+    # the real _auto_shard_cap honors the option; without a captured
+    # width the slots are this machine's CPUs
     assert DS._auto_shard_cap(7) == 7
-    assert DS._auto_shard_cap(None) >= 32
+    assert DS._auto_shard_cap(None, 6) == 6
+    assert DS._auto_shard_cap(None) == (_os.cpu_count() or 1)
 
 
 def test_coerce_sharded_read_equals_single_thread(spark, tmp_path):
@@ -789,8 +805,8 @@ def test_cluster_cap_travels_through_real_spark_read(spark, tmp_path):
     proof: the class attribute is set (exactly what register() does, with a
     simulated 48-core width since local mode can't exceed its own core
     count), the class is re-registered, and a REAL spark.read on a 50 MB
-    file must plan 48 shards — not the 32 the dead getActiveSession()
-    fallback would give."""
+    file must plan 48 shards — not this machine's CPU count, the fallback
+    for a reader without a captured width."""
     import zipfile
 
     from sheetreader_duckdb_spark import register
@@ -827,7 +843,7 @@ def test_cluster_cap_travels_through_real_spark_read(spark, tmp_path):
     try:
         spark.dataSource.register(SheetReaderDataSource)
         df = spark.read.format("sheetreader").load(path)
-        # min(max(32, 48), 50 MB) = 48 shards — the 48 proves the value
+        # min(50 MB, 48 slots) = 48 shards — the 48 proves the value
         # crossed into the planning worker; rows prove shard correctness.
         assert df.rdd.getNumPartitions() == 48
         assert df.count() == 2000

@@ -343,7 +343,7 @@ def test_sink_index_stats_option(spark, tmp_path):
     assert n == 1000
 
 
-def test_prune_aware_partition_planning(stats_xlsx):
+def test_prune_aware_partition_planning(stats_xlsx, monkeypatch):
     """A selective staged filter on a stats-indexed file caps the auto
     fan-out at the surviving interval count — a point lookup must not
     schedule a task per interval it will never inflate (r11)."""
@@ -360,6 +360,21 @@ def test_prune_aware_partition_planning(stats_xlsx):
     if len(wide) > 4:  # fixture big enough for the probe branch
         assert len(narrow) < len(wide), (len(narrow), len(wide))
     # the narrow plan still returns exactly the matching rows
+    rows = []
+    for part in narrow:
+        for batch in reader.read(part):
+            rows.extend(zip(*[c.to_pylist() for c in batch.columns]))
+    assert [r[0] for r in rows] == [77_777.0]
+    # A one-wave budget of 4 slots still probes a file sized for more
+    # shards: a 50 MB file plans 4 tasks, its point lookup fewer.
+    monkeypatch.setattr(DS, "_file_size", lambda _p: 50 << 20)
+    reader = DS.SheetReaderReader(
+        {"path": stats_xlsx, "filter_pushdown": "true"}, SCHEMA, 4
+    )
+    assert len(reader.partitions()) == 4
+    reader.pushFilters([EqualTo(("id",), 77_777.0)])
+    narrow = reader.partitions()
+    assert len(narrow) < 4
     rows = []
     for part in narrow:
         for batch in reader.read(part):

@@ -34,10 +34,14 @@ def _read(spark, path, **options):
     return r.load(path)
 
 
+DEMO_XLSX = os.path.join(os.path.dirname(__file__), "fixtures", "demo.xlsx")
+
+
 # -- S1/S7/S13: byte-for-byte replay of the reference's demo golden output
-#    (/root/reference/docker-demo/README.md:44-58) --
+#    (docker-demo/README.md:44-58) on a hand-written workbook of the demo's
+#    layout (tests/fixtures/make_demo_xlsx.py) --
 def test_demo_replay(sr):
-    df = _read(sr, "/root/reference/docker-demo/test.xlsx")
+    df = _read(sr, DEMO_XLSX)
     assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
         ("Name", "string"),
         ("Age", "double"),

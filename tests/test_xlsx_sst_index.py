@@ -52,8 +52,8 @@ SCHEMA = StructType(
 )
 
 
-def _collect(options, schema=SCHEMA):
-    reader = DS.SheetReaderReader(options, schema)
+def _collect(options, schema=SCHEMA, default_parallelism=None):
+    reader = DS.SheetReaderReader(options, schema, default_parallelism)
     rows: list[tuple] = []
     for part in reader.partitions():
         for batch in reader.read(part):
@@ -86,14 +86,34 @@ def test_sst_index_written_and_interval_heap_matches_eager(stringy_xlsx):
         assert 0 < len(heap._subs) <= len(spts)
 
 
-def test_sst_indexed_sharded_read_equals_single(stringy_xlsx):
+def test_sst_indexed_sharded_read_equals_single(stringy_xlsx, spark, tmp_path):
+    """Sharded reads return exactly the single-thread rows: an explicit
+    6-shard read, and the AUTO plan at the session's width — one wave of
+    shards — on the indexed file and on a foreign copy with no index,
+    whose every shard re-inflates the whole members."""
     P._SST_LAZY_CACHE.clear()
     single = _collect({"path": stringy_xlsx, "threads": "1"})
+    key = lambda r: r[0]  # noqa: E731
+    want = sorted(single, key=key)
     P._SST_LAZY_CACHE.clear()
     sharded = _collect({"path": stringy_xlsx, "threads": "6"})
     assert len(sharded) == N
-    key = lambda r: r[0]  # noqa: E731
-    assert sorted(single, key=key) == sorted(sharded, key=key)
+    assert sorted(sharded, key=key) == want
+    foreign = str(tmp_path / "foreign.xlsx")
+    with zipfile.ZipFile(stringy_xlsx) as zin, zipfile.ZipFile(
+        foreign, "w", zipfile.ZIP_DEFLATED
+    ) as zout:
+        for info in zin.infolist():
+            zout.writestr(info.filename, zin.read(info.filename))
+    width = spark.sparkContext.defaultParallelism
+    for path in (stringy_xlsx, foreign):
+        plan = DS.SheetReaderReader({"path": path}, SCHEMA, width).partitions()
+        assert len(plan) <= width
+        if width >= 2:  # a one-slot session plans the single shard
+            assert len(plan) > 1
+        P._SST_LAZY_CACHE.clear()
+        got = _collect({"path": path}, default_parallelism=width)
+        assert sorted(got, key=key) == want
 
 
 def test_sst_corrupt_section_falls_back_to_full_heap(stringy_xlsx, tmp_path):
@@ -118,10 +138,16 @@ def test_sst_corrupt_section_falls_back_to_full_heap(stringy_xlsx, tmp_path):
 def test_sst_index_lifts_string_heavy_shard_cap(stringy_xlsx, tmp_path):
     """Planning: without the sst index the string-heavy refinement caps
     the fan-out (~8 × sheet/sst bytes); with it the size-based count
-    stands — per-shard heap cost no longer exists to throttle."""
-    with_index = len(
-        DS.SheetReaderReader({"path": stringy_xlsx}, SCHEMA).partitions()
-    )
+    stands — per-shard heap cost no longer exists to throttle. Planned at
+    4 and at 32 task slots: a one-wave budget of 4 must not skip the
+    metadata probe."""
+
+    def n_parts(path, slots):
+        reader = DS.SheetReaderReader(
+            {"path": path}, SCHEMA, default_parallelism=slots
+        )
+        return len(reader.partitions())
+
     # strip ONLY the sst section; keep the row index so everything else
     # about the plan is unchanged
     p = str(tmp_path / "no_sst_section.xlsx")
@@ -132,9 +158,9 @@ def test_sst_index_lifts_string_heavy_shard_cap(stringy_xlsx, tmp_path):
         payload.pop(k, None)
     with zipfile.ZipFile(p, "a") as zf:
         zf.comment = SI.MAGIC + json.dumps(payload, separators=(",", ":")).encode()
-    without = len(DS.SheetReaderReader({"path": p}, SCHEMA).partitions())
     # this fixture's sst dwarfs its sheet, so the capped count is smaller
-    assert without < with_index
+    for slots in (4, 32):
+        assert n_parts(p, slots) < n_parts(stringy_xlsx, slots), slots
 
 
 def test_interval_heap_corrupt_refs_match_sequential_semantics(stringy_xlsx):
