@@ -39,6 +39,7 @@ from __future__ import annotations
 import glob as _glob
 import operator as _op
 import os
+import sys
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -81,6 +82,68 @@ _SPARK_TO_SQL = {
 # fixed overhead 8× more often. 64k keeps batches a few MB (3-col sf1:
 # ~5 MB of raw bytes) — still far under Arrow/Spark batch comfort.
 DEFAULT_BATCH_SIZE = 65536
+
+
+def _guard_zip_directory_reads() -> None:
+    """Stop Spark's per-call worker set-up from re-reading unchanged zips.
+
+    Every command a Spark Python worker runs (a planning call such as
+    ``schema()`` or ``partitions()``, or one task) starts with
+    ``worker_util.setup_spark_files``, which calls
+    ``importlib.invalidate_caches()``. On CPython 3.11 that makes every
+    ``zipimporter`` on ``sys.path`` eagerly re-read its archive's central
+    directory: the worker holds ~12 importers over ``pyspark.zip`` and 2
+    over the Spark core jar, 0.13-0.23 s per call (Spark 4.1, 4-core
+    machine). CPython 3.12 made the re-read lazy (python/cpython
+    gh-103200), so the guard is installed only below 3.12.
+
+    The guard replaces ``zipimporter.invalidate_caches`` with a version
+    that stats the archive first: when ``(st_mtime_ns, st_size, st_ino)``
+    equals the stamp taken just before the guard's last read of that
+    archive, the importer keeps (or takes) the directory that read
+    produced; a changed, missing or unreadable archive goes through the
+    stock re-read. So the call that installs the guard pays the stock cost,
+    the next one reads each archive once, and later ones read none. It is
+    installed at most once per process, and only inside a Spark Python
+    worker (``SparkFiles._is_running_on_worker``), a process the source's
+    own calls run in; the driver's import machinery belongs to the
+    application and is left alone. The once-per-process mark is on the
+    installed method, not a module global, because ``register()`` pickles
+    this module by value and a worker re-creates its globals on every
+    call."""
+    import zipimport
+
+    if sys.version_info >= (3, 12):
+        return
+    if getattr(zipimport.zipimporter.invalidate_caches, "_stat_guarded", False):
+        return
+    from pyspark.core.files import SparkFiles
+
+    if not SparkFiles._is_running_on_worker:
+        return
+    stock = zipimport.zipimporter.invalidate_caches
+    reads: dict = {}  # archive -> (stat stamp taken before the read, directory)
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            reads.pop(self.archive, None)
+            return stock(self)
+        stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        last = reads.get(self.archive)
+        if last is not None and last[0] == stamp:
+            self._files = last[1]
+            zipimport._zip_directory_cache[self.archive] = last[1]
+            return
+        stock(self)
+        if self.archive in zipimport._zip_directory_cache:  # the read succeeded
+            reads[self.archive] = (stamp, self._files)
+        else:
+            reads.pop(self.archive, None)
+
+    invalidate_caches._stat_guarded = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def _filter_mask_builder(filters, schema: StructType):
@@ -670,6 +733,7 @@ class SheetReaderDataSource(DataSource):
         return "sheetreader"
 
     def schema(self):
+        _guard_zip_directory_reads()
         opts = _Options.from_options(self.options)
         # Multi-file reads probe files IN ORDER until one has two typeable
         # rows — any member can carry the relation's schema (all share one
@@ -709,15 +773,18 @@ class SheetReaderDataSource(DataSource):
     _cluster_default_parallelism: int | None = None
 
     def reader(self, schema: StructType) -> "SheetReaderReader":
+        _guard_zip_directory_reads()
         return SheetReaderReader(
             self.options, schema,
             default_parallelism=type(self)._cluster_default_parallelism,
         )
 
     def simpleStreamReader(self, schema: StructType) -> "SheetReaderStreamReader":
+        _guard_zip_directory_reads()
         return SheetReaderStreamReader(self.options, schema)
 
     def writer(self, schema: StructType, overwrite: bool) -> "SheetReaderWriter":
+        _guard_zip_directory_reads()
         # Distributed XLSX sink: df.write.format("sheetreader").save(dir)
         # writes one workbook per non-empty partition (part-<pid>[-k].xlsx),
         # each readable by this source — the write-side mirror of the
@@ -811,6 +878,7 @@ class SheetReaderWriter(DataSourceWriter):
         return os.path.join(f".staging-{self.token}", f"{attempt}-{final}")
 
     def write(self, iterator) -> _WriteCommit:
+        _guard_zip_directory_reads()
         from pyspark import TaskContext
 
         from sheetreader_duckdb_spark.sources.xlsx.writer import IncrementalXlsxWriter
@@ -873,6 +941,7 @@ class SheetReaderWriter(DataSourceWriter):
         shutil.rmtree(self._staging_dir(), ignore_errors=True)
 
     def commit(self, messages) -> None:
+        _guard_zip_directory_reads()
         for m in messages:
             if m is None:
                 continue
@@ -881,6 +950,7 @@ class SheetReaderWriter(DataSourceWriter):
         self._sweep_staged()
 
     def abort(self, messages) -> None:
+        _guard_zip_directory_reads()
         self._sweep_staged()
 
 
@@ -1081,6 +1151,7 @@ class SheetReaderReader(DataSourceReader):
         return n
 
     def read(self, partition: _SheetPartition):
+        _guard_zip_directory_reads()
         # Task boundary on this (possibly reused) worker: let the pinned
         # lazy sst heap drop the previous task's interval cache (r12).
         # Bumped at CALL time, not first iteration (read() itself is not
@@ -1829,6 +1900,7 @@ class SheetReaderStreamReader(SimpleDataSourceStreamReader):
         return {"processed": []}
 
     def read(self, start: dict):
+        _guard_zip_directory_reads()
         seen = set(start.get("processed", []))
         new = [f for f in self._current_files() if f not in seen]
         end = {"processed": sorted(seen | set(new))}
@@ -1837,6 +1909,7 @@ class SheetReaderStreamReader(SimpleDataSourceStreamReader):
         return list(self._rows(new)), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
+        _guard_zip_directory_reads()
         new = sorted(set(end.get("processed", [])) - set(start.get("processed", [])))
         return list(self._rows(new))
 

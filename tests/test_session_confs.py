@@ -60,6 +60,12 @@ def test_get_spark_applies_codegen_cache(spark):
     # visible on the live session (static confs bind at JVM session build,
     # which is exactly why configure_session cannot retrofit them and every
     # builder must go through static_builder_confs).
+    #
+    # Assumes the fixture's session is the FIRST one built in this JVM: if
+    # a test had built a session earlier, getOrCreate would return that
+    # one, whose static confs came from another builder. The app name is
+    # only taken from the first builder, so it proves the assumption holds.
+    assert spark.sparkContext.appName == "sheetreader-tests"
     assert (
         spark.conf.get("spark.sql.codegen.cache.maxEntries")
         == os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "10000")
